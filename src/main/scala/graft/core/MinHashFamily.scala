@@ -16,7 +16,8 @@ import java.util.concurrent.ConcurrentHashMap
   * each minimum is min over shingles of FxHash64(seed:u64, shingle:u32);
   * empty shingle set leaves every minimum at u64::MAX (minhasher.rs:22-45).
   */
-final class MinHashFamily(val bandCount: Int, val bandSize: Int, val seed: Long) {
+final class MinHashFamily(val bandCount: Int, val bandSize: Int, val seed: Long)
+    extends Serializable {
   /** Flat [bandCount * bandSize] seed array, band-major — band i uses draws
     * [i*bandSize, (i+1)*bandSize) of the stream (minhash.rs:73-75). */
   val seeds: Array[Long] = {
@@ -30,25 +31,44 @@ final class MinHashFamily(val bandCount: Int, val bandSize: Int, val seed: Long)
     out
   }
 
-  /** Band hashes (u64 bit patterns) for one shingle set. */
-  def hash(set: IntHashSet): Array[Long] = {
-    val shingles = set.toArray
+  /** rotl(FxHash(seed), 5) per seed, so FxHash(seed, x) = (r ^ x) * K. */
+  private val rotated: Array[Long] = seeds.map(s => java.lang.Long.rotateLeft(FxHash.hash1(s), 5))
+
+  /** Band hashes (u64 bit patterns) for one shingle set. Each pass over
+    * the shingles keeps three of a band's per-seed minima in registers, so a
+    * band of up to three seeds is one pass (a narrower band repeats its last
+    * seed and folds only its own minima). Minima are kept sign-flipped: a
+    * signed compare orders them as u64. */
+  def hash(set: ShingleSet): Array[Long] = {
+    val shingles = set.sorted
     val out = new Array[Long](bandCount)
     var b = 0
     while (b < bandCount) {
+      val last = (b + 1) * bandSize - 1
       var h = 0L // band accumulator: FxHash over the minima, no length prefix
-      var j = 0
-      while (j < bandSize) {
-        val s = seeds(b * bandSize + j)
-        var m = -1L // u64::MAX
+      var j = b * bandSize
+      while (j <= last) {
+        val r0 = rotated(j)
+        val r1 = rotated(math.min(j + 1, last))
+        val r2 = rotated(math.min(j + 2, last))
+        var m0 = Long.MaxValue // u64::MAX, sign-flipped
+        var m1 = Long.MaxValue
+        var m2 = Long.MaxValue
         var k = 0
         while (k < shingles.length) {
-          val v = FxHash.hash2(s, shingles(k).toLong & 0xffffffffL)
-          if (java.lang.Long.compareUnsigned(v, m) < 0) m = v
+          val x = (shingles(k) ^ Int.MinValue).toLong & 0xffffffffL
+          val v0 = ((r0 ^ x) * FxHash.K) ^ Long.MinValue
+          val v1 = ((r1 ^ x) * FxHash.K) ^ Long.MinValue
+          val v2 = ((r2 ^ x) * FxHash.K) ^ Long.MinValue
+          if (v0 < m0) m0 = v0
+          if (v1 < m1) m1 = v1
+          if (v2 < m2) m2 = v2
           k += 1
         }
-        h = FxHash.add(h, m)
-        j += 1
+        h = FxHash.add(h, m0 ^ Long.MinValue)
+        if (j + 1 <= last) h = FxHash.add(h, m1 ^ Long.MinValue)
+        if (j + 2 <= last) h = FxHash.add(h, m2 ^ Long.MinValue)
+        j += 3
       }
       out(b) = h
       b += 1

@@ -1,5 +1,25 @@
 package graft.core
 
+/** A shingle set in the one form every consumer reads: the distinct u32
+  * window hashes, sorted by unsigned value, each stored with its sign bit
+  * flipped so that signed order is unsigned order. Intersection is a linear
+  * merge ([[Shingles.jaccardSorted]]) and MinHash minima are signed compares
+  * ([[MinHashFamily.hash]]); 4 bytes per shingle. Same role as the
+  * reference's `IntSet<u32>` (shingleset.rs:7-9): only membership matters to
+  * the reference, so the order is ours to choose. */
+final class ShingleSet(val sorted: Array[Int]) extends AnyVal {
+  def size: Int = sorted.length
+
+  /** The members as raw u32 bit patterns (sign bit restored), ascending
+    * by unsigned value. */
+  def toArray: Array[Int] = {
+    val out = new Array[Int](sorted.length)
+    var i = 0
+    while (i < out.length) { out(i) = sorted(i) ^ Int.MinValue; i += 1 }
+    out
+  }
+}
+
 /** Character-n-gram shingling, bit-exact to the reference's `ShingleSet`
   * (/root/reference/src/minhash/shingleset.rs).
   *
@@ -58,92 +78,129 @@ object Shingles {
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
-  /** Shingle set over UTF-8 bytes (hot path; same semantics as fromText). */
-  def fromTextUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int,
-                   salt: Option[String] = None): IntHashSet = {
-    val st = FxHash.saltState(salt)
-    val cps = codePointsUtf8(bytes, offset, len)
-    val set = new IntHashSet(math.max(8, cps.length))
+  private val Empty = new ShingleSet(new Array[Int](0))
+
+  /** The set of every `ngramWidth`-code-point window of `cps`
+    * (shingleset.rs:24-47): each window hash is [[FxHash.hashCodePointsSalted]]
+    * with the salt state and the slice's length prefix hoisted out of the
+    * window loop, read in place from `cps`. */
+  private def windows(cps: Array[Int], ngramWidth: Int, salt: Option[String]): ShingleSet = {
+    require(ngramWidth >= 0, s"ngram width must not be negative: $ngramWidth")
     val n = cps.length - ngramWidth + 1
-    val window = new Array[Int](ngramWidth)
+    if (n <= 0) return Empty
+    val prefix = FxHash.add(FxHash.saltState(salt), ngramWidth.toLong)
+    val hs = new Array[Int](n)
     var i = 0
     while (i < n) {
-      System.arraycopy(cps, i, window, 0, ngramWidth)
-      set.add(FxHash.hashCodePointsSalted(st, window, ngramWidth))
+      var h = prefix
+      var j = i
+      val end = i + ngramWidth
+      while (j < end) { h = FxHash.add(h, cps(j).toLong & 0xffffffffL); j += 1 }
+      hs(i) = h.toInt
       i += 1
     }
-    set
+    fromHashes(hs)
   }
 
-  /** Shingle set of all `ngramWidth`-code-point windows (shingleset.rs:24-35). */
-  def fromText(s: String, ngramWidth: Int, salt: Option[String] = None): IntHashSet = {
-    val st = FxHash.saltState(salt)
-    val cps = codePoints(s)
-    val set = new IntHashSet(math.max(8, cps.length))
-    val n = cps.length - ngramWidth + 1
-    val window = new Array[Int](ngramWidth)
+  /** The set of the raw u32 hashes `hs`: a 4-pass LSD radix sort by unsigned
+    * value (8 bits a pass, the last pass flipping sign bits), then
+    * duplicates dropped in place. Consumes `hs`. */
+  def fromHashes(hs: Array[Int]): ShingleSet = {
+    val n = hs.length
+    if (n == 0) return Empty
+    val c0 = new Array[Int](256)
+    val c1 = new Array[Int](256)
+    val c2 = new Array[Int](256)
+    val c3 = new Array[Int](256)
     var i = 0
     while (i < n) {
-      System.arraycopy(cps, i, window, 0, ngramWidth)
-      set.add(FxHash.hashCodePointsSalted(st, window, ngramWidth))
+      val v = hs(i)
+      c0(v & 0xff) += 1
+      c1((v >>> 8) & 0xff) += 1
+      c2((v >>> 16) & 0xff) += 1
+      c3(v >>> 24) += 1
       i += 1
     }
-    set
+    var s0, s1, s2, s3 = 0 // exclusive prefix sums: bucket start offsets
+    var b = 0
+    while (b < 256) {
+      val a0 = c0(b); c0(b) = s0; s0 += a0
+      val a1 = c1(b); c1(b) = s1; s1 += a1
+      val a2 = c2(b); c2(b) = s2; s2 += a2
+      val a3 = c3(b); c3(b) = s3; s3 += a3
+      b += 1
+    }
+    val tmp = new Array[Int](n)
+    scatter(hs, tmp, c0, 0, 0)
+    scatter(tmp, hs, c1, 8, 0)
+    scatter(hs, tmp, c2, 16, 0)
+    scatter(tmp, hs, c3, 24, Int.MinValue)
+    var k = 1
+    i = 1
+    while (i < n) {
+      if (hs(i) != hs(k - 1)) { hs(k) = hs(i); k += 1 }
+      i += 1
+    }
+    new ShingleSet(if (k == n) hs else java.util.Arrays.copyOf(hs, k))
   }
+
+  /** One counting-sort pass on the byte at `shift`, xor-ing `flip` in. */
+  private def scatter(src: Array[Int], dst: Array[Int], offsets: Array[Int], shift: Int,
+                      flip: Int): Unit = {
+    var i = 0
+    while (i < src.length) {
+      val v = src(i)
+      val d = (v >>> shift) & 0xff
+      dst(offsets(d)) = v ^ flip
+      offsets(d) += 1
+      i += 1
+    }
+  }
+
+  /** Shingle set over UTF-8 bytes (hot path; same semantics as fromText). */
+  def fromTextUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int,
+                   salt: Option[String] = None): ShingleSet =
+    windows(codePointsUtf8(bytes, offset, len), ngramWidth, salt)
+
+  /** Shingle set of all `ngramWidth`-code-point windows (shingleset.rs:24-35). */
+  def fromText(s: String, ngramWidth: Int, salt: Option[String] = None): ShingleSet =
+    windows(codePoints(s), ngramWidth, salt)
 
   /** Shingle set from caller-provided shingle strings: each string hashed
     * whole as its code-point sequence (shingleset.rs:12-22). */
-  def fromShingles(shingles: Iterator[String], salt: Option[String] = None): IntHashSet = {
+  def fromShingles(shingles: Iterator[String], salt: Option[String] = None): ShingleSet = {
     val st = FxHash.saltState(salt)
-    val set = new IntHashSet(16)
-    while (shingles.hasNext) {
-      val s = shingles.next()
+    val hs = Array.newBuilder[Int]
+    shingles.foreach { s =>
       val cps = codePoints(s)
-      set.add(FxHash.hashCodePointsSalted(st, cps, cps.length))
+      hs += FxHash.hashCodePointsSalted(st, cps, cps.length)
     }
-    set
+    fromHashes(hs.result())
   }
 
-  /** Shingle set as a sorted (unsigned) int array — the cache-friendly form
-    * for repeated pairwise Jaccard: 4 bytes per shingle and intersection by
-    * linear merge instead of hash probes. Same set, different layout. */
-  def sortedShinglesUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int): Array[Int] = {
-    val arr = fromTextUtf8(bytes, offset, len, ngramWidth).toArray
-    // sort by unsigned value (flip sign bit -> natural order)
-    var i = 0
-    while (i < arr.length) { arr(i) = arr(i) ^ Int.MinValue; i += 1 }
-    java.util.Arrays.sort(arr)
-    arr
-  }
+  /** The sorted array of [[fromTextUtf8]]'s set, the form `lsh_jaccard`'s
+    * memo, `shingle_hashes` and the fused self-join hold. */
+  def sortedShinglesUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int): Array[Int] =
+    fromTextUtf8(bytes, offset, len, ngramWidth).sorted
 
-  /** Jaccard over two sorted shingle arrays (merge-count); either empty → 0.0. */
+  /** Exact Jaccard |A∩B|/|A∪B| over two sorted shingle arrays (merge-count);
+    * either side empty → 0.0 (shingleset.rs:49-57). */
   def jaccardSorted(a: Array[Int], b: Array[Int]): Double = {
     if (a.length == 0 || b.length == 0) return 0.0
     var i = 0
     var j = 0
     var inter = 0
-    while (i < a.length && j < b.length) {
+    while (i < a.length && j < b.length) { // branch-free: which side advances is unpredictable
       val x = a(i)
       val y = b(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
+      inter += (if (x == y) 1 else 0)
+      i += (if (x <= y) 1 else 0)
+      j += (if (y <= x) 1 else 0)
     }
     inter.toDouble / (a.length + b.length - inter).toDouble
   }
 
-  /** Exact Jaccard |A∩B|/|A∪B| over shingle sets; either side empty → 0.0
-    * (shingleset.rs:49-57). */
-  def jaccard(a: IntHashSet, b: IntHashSet): Double = {
-    if (a.size == 0 || b.size == 0) 0.0
-    else {
-      val inter = a.intersectionSize(b)
-      val union = a.size + b.size - inter
-      inter.toDouble / union.toDouble
-    }
-  }
-
   /** Fused text-to-text Jaccard (lsh_jaccard semantics, minhash.rs:236-296). */
   def jaccardText(a: String, b: String, ngramWidth: Int): Double =
-    jaccard(fromText(a, ngramWidth), fromText(b, ngramWidth))
+    jaccardSorted(fromText(a, ngramWidth).sorted, fromText(b, ngramWidth).sorted)
 }

@@ -394,6 +394,7 @@ object EventStreams {
                         ttlMs: Long = 60 * 60 * 1000L, maxBucket: Int = 64): Dataset[DupCandidate] = {
     import docs.sparkSession.implicits._
     val w = ngramWidth
+    val fam = graft.core.MinHashFamily(bandCount, bandSize, lshSeed)
     val banded = docs.select(col("doc_id").cast("long"), col("ts"), col("text"))
       .as[(Long, Timestamp, String)]
       .flatMap { case (id, ts, text) =>
@@ -401,7 +402,7 @@ object EventStreams {
         else {
           val bytes = text.getBytes("UTF-8")
           val set = graft.core.Shingles.fromTextUtf8(bytes, 0, bytes.length, w)
-          val hs = graft.core.MinHashFamily(bandCount, bandSize, lshSeed).hash(set)
+          val hs = fam.hash(set)
           hs.iterator.zipWithIndex.map { case (h, band) => (band, h, id, ts) }
         }
       }.toDF("band", "h", "doc_id", "ts")

@@ -147,17 +147,17 @@ case class LshMin(children: Seq[Expression], is32: Boolean)
       } else {
         val arr = v.asInstanceOf[ArrayData]
         val n = arr.numElements()
-        val set = new IntHashSet(math.max(8, n))
+        val hs = new Array[Int](n)
         var i = 0
         while (i < n) {
           // NULL list elements are untested in the reference; treat as ''.
           val s = if (arr.isNullAt(i)) UTF8String.EMPTY_UTF8 else arr.getUTF8String(i)
           val b = s.getBytes
           val cps = Shingles.codePointsUtf8(b, 0, b.length)
-          set.add(FxHash.hashCodePoints(cps, cps.length))
+          hs(i) = FxHash.hashCodePoints(cps, cps.length)
           i += 1
         }
-        set
+        Shingles.fromHashes(hs)
       }
     LshParams.toArrayData(family.hash(set), is32)
   }
@@ -296,17 +296,19 @@ case class LshJaccard(left: Expression, right: Expression, width: Expression)
   private final val MaxEntries = 1 << 17
   private final val MaxBytes = 256L << 20
 
+  // An entry's bytes are counted only when its insert wins, so a lost race
+  // adds nothing and the first entry after a clear is counted.
   private def shingleSet(s: UTF8String): Array[Int] = {
-    var set = memo.get(s)
-    if (set != null) return set
+    val hit = memo.get(s)
+    if (hit != null) return hit
     val bytes = s.getBytes
-    set = Shingles.sortedShinglesUtf8(bytes, 0, bytes.length, ngramWidth)
-    if (memo.size() >= MaxEntries ||
-        memoBytes.addAndGet(bytes.length + 4L * set.length + 48L) > MaxBytes) {
+    val set = Shingles.sortedShinglesUtf8(bytes, 0, bytes.length, ngramWidth)
+    val cost = bytes.length + 4L * set.length + 48L
+    if (memo.size() >= MaxEntries || memoBytes.get() + cost > MaxBytes) {
       memo.clear()
       memoBytes.set(0L)
     }
-    memo.putIfAbsent(s.clone(), set)
+    if (memo.putIfAbsent(s.clone(), set) == null) memoBytes.addAndGet(cost)
     set
   }
 

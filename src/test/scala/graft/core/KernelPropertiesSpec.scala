@@ -122,14 +122,84 @@ class KernelPropertiesSpec extends AnyFunSuite {
     assert((all :+ base).distinct.size == all.size + 1, "some salt collided a whole set")
   }
 
-  test("IntHashSet agrees with scala Set") {
-    forSamples(Gen.listOf(Gen.chooseNum(Int.MinValue, Int.MaxValue))) { xs =>
-      val s = new IntHashSet(4)
-      xs.foreach(s.add)
-      val ref = xs.toSet
-      assert(s.size == ref.size)
-      assert(s.toArray.toSet == ref)
-      xs.foreach(x => assert(s.contains(x)))
+  // BMP and astral (surrogate-pair) text, texts shorter than the widest
+  // width, and heavily repeated windows, with widths 1-8, salted or not.
+  private val shingleCase: Gen[(String, Int, Option[String])] = {
+    val cp = Gen.frequency(6 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf(" ", "é", "語", "ß"), 2 -> Gen.oneOf("😀", "🌀", "𝕏"))
+    val mixed = Gen.chooseNum(0, 60).flatMap(n => Gen.listOfN(n, cp).map(_.mkString))
+    val short = Gen.chooseNum(0, 7).flatMap(n => Gen.listOfN(n, cp).map(_.mkString))
+    val repeated = Gen.zip(Gen.chooseNum(1, 3).flatMap(k => Gen.listOfN(k, cp)), Gen.chooseNum(0, 80))
+      .map { case (unit, r) => unit.mkString * r }
+    Gen.zip(Gen.frequency(3 -> mixed, 1 -> short, 2 -> repeated), Gen.chooseNum(1, 8),
+      Gen.option(Gen.oneOf("pepper", "ab", "😀x")))
+  }
+
+  /** The distinct per-window hashes, ascending by unsigned value. */
+  private def windowHashes(s: String, w: Int, salt: Option[String]): Seq[Int] = {
+    val cps = Shingles.codePoints(s)
+    val st = FxHash.saltState(salt)
+    (0 to cps.length - w).map(i => FxHash.hashCodePointsSalted(st, cps.slice(i, i + w), w))
+      .distinct.sortWith(Integer.compareUnsigned(_, _) < 0)
+  }
+
+  /** Per-seed minima by unsigned compare, then FxHash over each band's minima. */
+  private def minhashOracle(fam: MinHashFamily, shingles: Seq[Int]): Seq[Long] =
+    (0 until fam.bandCount).map { b =>
+      (0 until fam.bandSize).foldLeft(0L) { (h, j) =>
+        var m = -1L
+        shingles.foreach { x =>
+          val v = FxHash.hash2(fam.seeds(b * fam.bandSize + j), x.toLong & 0xffffffffL)
+          if (java.lang.Long.compareUnsigned(v, m) < 0) m = v
+        }
+        FxHash.add(h, m)
+      }
+    }
+
+  test("shingle set = distinct per-window hashes sorted unsigned, String and UTF-8 paths") {
+    forSamples(shingleCase) { case (s, w, salt) =>
+      val want = windowHashes(s, w, salt)
+      val set = Shingles.fromText(s, w, salt)
+      assert(set.toArray.toSeq == want)
+      assert(set.size == want.size)
+      assert(set.sorted.toSeq == want.map(_ ^ Int.MinValue))
+      val bytes = s.getBytes("UTF-8")
+      assert(Shingles.fromTextUtf8(bytes, 0, bytes.length, w, salt).sorted.toSeq == set.sorted.toSeq)
+      val parts = s.split(" ", -1).toSeq
+      val st = FxHash.saltState(salt)
+      assert(Shingles.fromShingles(parts.iterator, salt).toArray.toSeq == parts.map { p =>
+        val cps = Shingles.codePoints(p)
+        FxHash.hashCodePointsSalted(st, cps, cps.length)
+      }.distinct.sortWith(Integer.compareUnsigned(_, _) < 0))
+    }
+  }
+
+  test("fromHashes: radix sort + dedup over arbitrary ints") {
+    val ints = Gen.frequency(
+      3 -> Gen.listOf(Gen.chooseNum(Int.MinValue, Int.MaxValue)),
+      1 -> Gen.listOf(Gen.chooseNum(0, 300)), // upper bytes all equal: skipped passes
+      1 -> Gen.listOf(Gen.oneOf(7, -7, 0x7f000000, Int.MinValue))) // heavy duplicates
+    forSamples(ints) { xs =>
+      val got = Shingles.fromHashes(xs.toArray)
+      assert(got.toArray.toSeq == xs.distinct.sortWith(Integer.compareUnsigned(_, _) < 0))
+    }
+  }
+
+  test("MinHashFamily.hash equals the per-seed compareUnsigned loop") {
+    forSamples(Gen.zip(shingleCase, Gen.chooseNum(1, 9), Gen.chooseNum(1, 5), Gen.long)) {
+      case ((s, w, salt), bands, size, seed) =>
+        val fam = MinHashFamily(bands, size, seed)
+        assert(fam.hash(Shingles.fromText(s, w, salt)).toSeq == minhashOracle(fam, windowHashes(s, w, salt)))
+    }
+  }
+
+  test("shingle_hashes output is the sign-flipped ascending window-hash array") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    forSamples(shingleCase) { case (s, w, _) =>
+      val got = org.apache.spark.sql.graft.ShingleHashes(Literal(s), Literal(w.toLong)).eval()
+        .asInstanceOf[ArrayData].toIntArray()
+      assert(got.toSeq == windowHashes(s, w, None).map(_ ^ Int.MinValue))
     }
   }
 
